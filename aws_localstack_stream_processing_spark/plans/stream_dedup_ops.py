@@ -11,7 +11,7 @@ put-if-absent sink (signer/index.js:229-242) generalized from
 content-equality to content-similarity: the "key" is the document's band
 set, collisions are candidates, and the convergence contract under
 at-least-once delivery is carried by the stores' composite-key
-put-if-absent semantics (``BandIndexSink`` / ``KeyedParquetSink``).
+put-if-absent semantics (both are ``KeyedParquetSink`` stores).
 
 Delivery plan (``_staged_doc_batches``): 3 mtime-ordered micro-batches —
 held-out originals, planted near-dups of CORPUS docs per batch, and (batch
@@ -62,6 +62,21 @@ from .registry import query
 
 _N_BANDS = _N_SEEDS // _BAND_ROWS
 _N_STORE_BUCKETS = 8  # fresh per-run stores; harness-sized bucket count
+
+
+def _band_index(path: str):
+    """The standing MinHash band index: put-if-absent on the full
+    ``(band, bv, doc_id)`` row, bucketed and fetched on the band key
+    ``(band, bv)`` — a fetch returns every indexed doc sharing a band
+    bucket with the batch (the candidate postings list)."""
+    from ..streaming.sinks import KeyedParquetSink
+
+    return KeyedParquetSink(
+        path,
+        ["band", "bv", "doc_id"],
+        n_buckets=_N_STORE_BUCKETS,
+        bucket_cols=["band", "bv"],
+    )
 
 
 def _corpus_sql(d: str) -> str:
@@ -241,16 +256,22 @@ def _banded(shing: DataFrame) -> DataFrame:
 def _seeded_corpus_index(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per testdata state, content-cached like the CDC
     staging) the corpus-seeded stores — ``shingles/`` (KeyedParquetSink,
-    doc_id → shingle set) and ``bands/`` (BandIndexSink) — that every run
-    copies fresh: the stream MUTATES its stores, so trials must not share
-    them, but the corpus seeding pass (the expensive part at bench SF)
-    need only ever run once."""
-    from ..streaming.sinks import BandIndexSink, KeyedParquetSink
+    doc_id → shingle set) and ``bands/`` (:func:`_band_index`) — that
+    every run copies fresh: the stream MUTATES its stores, so trials must
+    not share them, but the corpus seeding pass (the expensive part at
+    bench SF) need only ever run once.
+
+    The cache name carries the band index's bucket function
+    (``xxh64bv``: ``xxhash64(band, bv)``): a store built under another
+    bucket function would be probed in the wrong buckets, silently miss
+    its keys and append them again, so a change to the function must
+    change this name."""
+    from ..streaming.sinks import KeyedParquetSink
 
     base = sf_dir.rstrip("/")
     tag = os.path.basename(base)
     st = os.stat(f"{base}/documents.parquet")
-    cache = f"/tmp/slsp_lshidx_{tag}_{st.st_size}_{st.st_mtime_ns}"
+    cache = f"/tmp/slsp_lshidx_xxh64bv_{tag}_{st.st_size}_{st.st_mtime_ns}"
     marker = os.path.join(cache, "_SEEDED")
     if os.path.exists(marker):
         return cache
@@ -265,9 +286,7 @@ def _seeded_corpus_index(spark: SparkSession, sf_dir: str) -> str:
     KeyedParquetSink(
         f"{staging}/shingles", "doc_id", n_buckets=_N_STORE_BUCKETS
     ).upsert_batch(csh, 0)
-    BandIndexSink(
-        f"{staging}/bands", n_buckets=_N_STORE_BUCKETS
-    ).append_batch(_banded(csh))
+    _band_index(f"{staging}/bands").upsert_batch(_banded(csh), 0)
     os.rename(staging, cache)
     with open(marker, "w") as f:
         f.write("ok")
@@ -303,7 +322,7 @@ def make_gate(shstore, bstore, matches_path: str):
             # it could collide with are exactly store rows matching batch
             # band keys — all in this probe) — one store read per batch
             # instead of two
-            probed = bstore.probe(sp, bands_b).persist()
+            probed = bstore.fetch(sp, bands_b).persist()
             cached.append(probed)
             # cand persists (candidate-bounded, ≤ |batch| × matches rows):
             # the fetch's key collect AND the verification join both read
@@ -393,7 +412,7 @@ def make_gate(shstore, bstore, matches_path: str):
             concurrent_jobs(
                 sp,
                 lambda: shstore.upsert_batch(survivors, batch_id),
-                lambda: bstore.append_batch(surv_bands, probed),
+                lambda: bstore.upsert_batch(surv_bands, batch_id, probed),
             )
         finally:
             for df in cached:
@@ -418,7 +437,8 @@ def stream_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch inside ``foreachBatch`` —
 
     1. shingle + MinHash-band the batch's docs (batch-sized work);
-    2. probe the standing ``BandIndexSink`` — bucket-pruned read,
+    2. probe the standing band index (``KeyedParquetSink.fetch`` on the
+       band key) — bucket-pruned read,
        semi-joined against the BROADCAST batch band keys; the corpus is
        never scanned, shuffled, or broadcast;
     3. drop candidates pointing at the batch's own doc ids (within-batch
@@ -445,7 +465,7 @@ def stream_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import apply_runtime_confs
     from ..streaming.planlog import note_plan
     from ..streaming.resilience import start_and_await
-    from ..streaming.sinks import BandIndexSink, KeyedParquetSink
+    from ..streaming.sinks import KeyedParquetSink
     from ..streaming.statestore import apply_state_store
 
     apply_runtime_confs(spark)
@@ -457,7 +477,7 @@ def stream_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     shstore = KeyedParquetSink(
         f"{work}/shingles", "doc_id", n_buckets=_N_STORE_BUCKETS
     )
-    bstore = BandIndexSink(f"{work}/bands", n_buckets=_N_STORE_BUCKETS)
+    bstore = _band_index(f"{work}/bands")
     matches_path = f"{work}/matches"
     _gate = make_gate(shstore, bstore, matches_path)
 

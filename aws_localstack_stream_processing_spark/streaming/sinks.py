@@ -7,7 +7,10 @@ gives the engine that semantics over a parquet-backed keyed table: the
 ``foreachBatch`` upserter anti-joins each batch against the existing keys
 and appends only unseen ones — convergent even when the *checkpoint* is
 lost (a strictly stronger property than checkpoint-based exactly-once,
-which this composes with).
+which this composes with). One store class, :class:`KeyedParquetSink`,
+serves every keyed caller: the signature store (``tx_hash``), the
+near-dup gate's shingle store (``doc_id``) and its MinHash band index
+(``(band, bv, doc_id)`` bucketed on ``(band, bv)``).
 
 At warehouse scale the anti-join is a broadcast of the batch's keys against
 the key column of the sink (or a MERGE on a Delta/Iceberg table — same
@@ -18,25 +21,80 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+
+META_FILE = "_slsp_meta.json"
+
+
+def _read_bucket_count(path: str, default: int) -> int:
+    """The bucket count recorded in the store's ``_slsp_meta.json``
+    sidecar, or ``default`` when there is none. Stores written before the
+    sidecar existed keep the caller's count (back-compat: every pre-meta
+    store used its class's default count)."""
+    try:
+        with open(os.path.join(path, META_FILE)) as f:
+            return int(json.load(f)["n_buckets"])
+    except (OSError, ValueError, KeyError):
+        return default
+
+
+def _write_bucket_count(path: str, n_buckets: int) -> None:
+    os.makedirs(path, exist_ok=True)
+    with open(os.path.join(path, META_FILE), "w") as f:
+        json.dump({"n_buckets": n_buckets}, f)
+
+
+def _swap_in(path: str, staged: str, n_buckets: int) -> None:
+    """Swap a fully written rewrite at ``staged`` in for the store at
+    ``path``. The bucket-count sidecar is written INTO the staged dir
+    first, so the count travels with the data through the swap (ADVICE
+    r11: writing it after the swap left a crash window in which a fresh
+    sink probed the rewritten store at its constructor default and
+    duplicated keys). Then two renames: ``path`` → ``<staged>_old``,
+    ``staged`` → ``path``; the backup is dropped last. A crash between
+    the renames leaves the backup; recovery = rename it back."""
+    _write_bucket_count(staged, n_buckets)
+    backup = staged + "_old"
+    shutil.rmtree(backup, ignore_errors=True)
+    os.rename(path, backup)
+    os.rename(staged, path)
+    shutil.rmtree(backup)
 
 
 class KeyedParquetSink:
     """Append-only parquet table that behaves like a keyed KV store.
 
-    Contract: ``key_col`` is a non-null content hash (the reference's
-    DynamoDB PK, signer/index.js:229-242) — a NULL key has no bucket
-    (``xxhash64(NULL)`` is NULL) and would bypass the probe.
+    Contract: ``key`` (one column name or a list of them) identifies a
+    row — for the signature store it is the content hash, the
+    reference's DynamoDB PK (signer/index.js:229-242). Key columns must
+    be non-null: NULL never equals anything in the probe's semi-join, so
+    a NULL-keyed row is never found and every redelivery appends it
+    again.
 
-    Layout: hash-bucketed by key — every row lands in partition
-    ``__bucket = pmod(xxhash64(key), n_buckets)``. The put-if-absent
-    probe then reads ONLY the buckets the batch's keys can live in
+    Layout: hash-bucketed — every row lands in partition
+    ``__bucket = pmod(xxhash64(*bucket_cols), n_buckets)``, where
+    ``bucket_cols`` defaults to the key columns. The put-if-absent
+    probe then reads ONLY the buckets the batch's rows can live in
     (hive partition pruning), so per-batch probe cost is
     O(store/n_buckets × affected buckets), not O(store) — the same
     layout lever ``Scd2ParquetSink`` uses for its MERGE, applied to the
     read side. At 100 TB this is the difference between a full store
     scan per micro-batch and a bounded bucket probe.
+
+    ``bucket_cols`` may be a strict subset of the key: the near-dup
+    gate's MinHash band index (r13, VERDICT r12 #2) is keyed on
+    ``(band, bv, doc_id)`` and bucketed on the band key ``(band, bv)``,
+    which is legitimately NON-unique — many documents share a band
+    bucket; that collision IS the candidate signal. :meth:`fetch`
+    semi-joins on ``bucket_cols``, so it returns the candidate postings
+    list (every indexed doc sharing a band key with the batch), while
+    :meth:`upsert_batch` stays put-if-absent on the full key — a
+    redelivered batch re-derives identical band rows and every one drops
+    in the anti-join, so the index converges under at-least-once
+    delivery exactly like the signature store, generalized from
+    content-equality to content-similarity.
 
     Bucket-count evolution (VERDICT r10 #6): the count is NOT baked into
     readers — the store is self-describing via a ``_slsp_meta.json``
@@ -48,11 +106,17 @@ class KeyedParquetSink:
 
     N_BUCKETS = 16
     BUCKET_COL = "__bucket"
-    META_FILE = "_slsp_meta.json"
 
-    def __init__(self, path: str, key_col: str, n_buckets: int | None = None):
+    def __init__(
+        self,
+        path: str,
+        key: str | list[str],
+        n_buckets: int | None = None,
+        bucket_cols: list[str] | None = None,
+    ):
         self.path = path
-        self.key_col = key_col
+        self.key = [key] if isinstance(key, str) else list(key)
+        self.bucket_cols = list(bucket_cols) if bucket_cols else self.key
         self.n_buckets = int(n_buckets or self.N_BUCKETS)
         # test seam for the compact() concurrent-append guard
         self._compact_pre_swap = None
@@ -72,25 +136,6 @@ class KeyedParquetSink:
             self._store_schema = df.schema
             return df
         return spark.read.schema(self._store_schema).parquet(self.path)
-
-    # -- self-describing layout ------------------------------------------
-    def _meta_path(self) -> str:
-        return os.path.join(self.path, self.META_FILE)
-
-    def _sync_meta(self) -> None:
-        """Adopt the store's on-disk bucket count, if recorded. Stores
-        written before the meta sidecar existed keep the constructor's
-        count (back-compat: every pre-meta store used N_BUCKETS=16)."""
-        try:
-            with open(self._meta_path()) as f:
-                self.n_buckets = int(json.load(f)["n_buckets"])
-        except (OSError, ValueError, KeyError):
-            pass
-
-    def _write_meta(self) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        with open(self._meta_path(), "w") as f:
-            json.dump({"n_buckets": self.n_buckets}, f)
 
     def _legacy_flat_files(self) -> list[str]:
         """Pre-bucketing stores wrote ``part-*.parquet`` at the top level;
@@ -120,7 +165,7 @@ class KeyedParquetSink:
         if os.path.isdir(self.path) and any(
             f.startswith(f"{self.BUCKET_COL}=") for f in os.listdir(self.path)
         ):
-            self._sync_meta()
+            self.n_buckets = _read_bucket_count(self.path, self.n_buckets)
             return True
         return False
 
@@ -136,15 +181,13 @@ class KeyedParquetSink:
         order could crash between the two and leave the rows present in
         BOTH layouts — a re-run would then append them a second time
         despite the idempotence claim. Instead the migrated layout is
-        staged to a sibling directory (meta sidecar included, so it
-        travels with the data) and swapped in with the same two-rename
-        protocol as :meth:`resplit`. Any bucketed rows already present
-        (a crashed earlier migration) are unioned in and key-deduped, so
-        every crash point re-runs to the same converged store. A crash
-        BETWEEN the two renames leaves the ``.migrate_old`` backup;
-        recovery = rename it back."""
+        staged to a sibling directory and swapped in by :func:`_swap_in`
+        (the sidecar travels with the data; a crash between the renames
+        leaves the ``.migrate_old`` backup). Any bucketed rows already
+        present (a crashed earlier migration) are unioned in and
+        key-deduped, so every crash point re-runs to the same converged
+        store."""
         import glob as _glob
-        import shutil
 
         flat = self._legacy_flat_files()
         if not flat:
@@ -159,34 +202,36 @@ class KeyedParquetSink:
             prior = spark.read.option("basePath", self.path).parquet(
                 *prior_dirs
             )
-            rows = prior.unionByName(rows).dropDuplicates([self.key_col])
+            rows = prior.unionByName(rows).dropDuplicates(self.key)
         staged = self.path.rstrip("/") + ".migrate"
         shutil.rmtree(staged, ignore_errors=True)
         rows.write.mode("overwrite").partitionBy(self.BUCKET_COL).parquet(
             staged
         )
-        with open(os.path.join(staged, self.META_FILE), "w") as f:
-            json.dump({"n_buckets": self.n_buckets}, f)
-        backup = self.path.rstrip("/") + ".migrate_old"
-        shutil.rmtree(backup, ignore_errors=True)
-        os.rename(self.path, backup)
-        os.rename(staged, self.path)
-        shutil.rmtree(backup)
+        _swap_in(self.path, staged, self.n_buckets)
         return len(flat)
 
     def _bucket_expr(self):
         from pyspark.sql import functions as F
 
         return F.pmod(
-            F.xxhash64(F.col(self.key_col)), F.lit(self.n_buckets)
+            F.xxhash64(*[F.col(c) for c in self.bucket_cols]),
+            F.lit(self.n_buckets),
         ).cast("int")
 
+    def _affected_buckets(self, df: DataFrame) -> list[int]:
+        """Distinct bucket ids of ``df`` (bounded driver collect: ≤
+        n_buckets values) — the partition filter of every pruned read."""
+        return [r[0] for r in df.select(self.BUCKET_COL).distinct().collect()]
+
     @staticmethod
-    def probe_plan(seen: DataFrame, fresh: DataFrame, key_col: str) -> DataFrame:
+    def probe_plan(
+        seen: DataFrame, fresh: DataFrame, key: str | list[str]
+    ) -> DataFrame:
         """The put-if-absent probe's pure plan (plan-lintable, like
-        ``Scd2ParquetSink.merge_plan``): given the store's key column
-        (already bucket-pruned) and the deduped batch, return the
-        batch rows whose keys are NOT in the store.
+        ``Scd2ParquetSink.merge_plan``): given the store's key columns
+        ``key`` (already bucket-pruned) and the deduped batch, return
+        the batch rows whose keys are NOT in the store.
 
         Broadcast direction matters at scale (r10, found by the plan
         audit that fixed the SCD2 merge): the naive
@@ -203,11 +248,16 @@ class KeyedParquetSink:
         from pyspark.sql import functions as F
 
         hits = seen.join(
-            F.broadcast(fresh.select(key_col)), key_col, "left_semi"
+            F.broadcast(fresh.select(key)), key, "left_semi"
         ).distinct()
-        return fresh.join(F.broadcast(hits), key_col, "left_anti")
+        return fresh.join(F.broadcast(hits), key, "left_anti")
 
-    def upsert_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def upsert_batch(
+        self,
+        batch_df: DataFrame,
+        batch_id: int,
+        seen: DataFrame | None = None,
+    ) -> None:
         """foreachBatch hook: put-if-absent per key.
 
         Within-batch duplicates collapse first (last write wins is
@@ -217,12 +267,21 @@ class KeyedParquetSink:
         driver collect (≤ n_buckets values), the store read prunes to
         those hive partitions, and only batch-sized key sets ever ride
         a broadcast.
+
+        ``seen`` (r14, guide §5): a caller that already read the store
+        this batch (e.g. through :meth:`fetch`) can pass that result —
+        any superset of the store rows sharing a key with the batch,
+        taken BEFORE any same-batch append — and the absence check reuses
+        it instead of reading the store a second time. Sound whenever
+        the caller fetched with the batch's own ``bucket_cols`` values: a
+        store row colliding with a batch row on the full key matches it
+        on ``bucket_cols`` too, so it is in the fetch result.
         """
         from pyspark.sql import functions as F
 
         spark = batch_df.sparkSession
         present = self.exists(spark)  # syncs n_buckets from meta
-        fresh = batch_df.dropDuplicates([self.key_col]).withColumn(
+        fresh = batch_df.dropDuplicates(self.key).withColumn(
             self.BUCKET_COL, self._bucket_expr()
         )
         if present:
@@ -231,53 +290,48 @@ class KeyedParquetSink:
             # batch dedup re-ran per job (r13, guide §5; batch-bounded)
             fresh = fresh.persist()
             try:
-                buckets = [
-                    r[0]
-                    for r in fresh.select(self.BUCKET_COL)
-                    .distinct()
-                    .collect()
-                ]
-                seen = (
-                    self._read_store(spark)
-                    .filter(F.col(self.BUCKET_COL).isin(buckets))
-                    .select(self.key_col)
+                if seen is None:
+                    seen = self._read_store(spark).filter(
+                        F.col(self.BUCKET_COL).isin(
+                            self._affected_buckets(fresh)
+                        )
+                    )
+                self.probe_plan(
+                    seen.select(self.key), fresh, self.key
+                ).write.mode("append").partitionBy(self.BUCKET_COL).parquet(
+                    self.path
                 )
-                self.probe_plan(seen, fresh, self.key_col).write.mode(
-                    "append"
-                ).partitionBy(self.BUCKET_COL).parquet(self.path)
             finally:
                 fresh.unpersist()
         else:
             fresh.write.mode("append").partitionBy(self.BUCKET_COL).parquet(
                 self.path
             )
-            self._write_meta()
+            _write_bucket_count(self.path, self.n_buckets)
 
     def read(self, spark: SparkSession) -> DataFrame:
         return self._read_store(spark).drop(self.BUCKET_COL)
 
     def fetch(self, spark: SparkSession, keys: DataFrame) -> DataFrame:
-        """Bucket-pruned point lookup (r13, for the streaming near-dup
-        gate): the store rows whose key appears in ``keys`` (a single
-        ``key_col`` column, batch-bounded). Read cost is |affected
-        buckets| partitions — the put-if-absent probe's read path, exposed
-        for callers that need the matched rows' PAYLOAD (e.g. fetching
-        candidate docs' shingle sets for Jaccard verification) rather
+        """Bucket-pruned lookup (r13, for the streaming near-dup gate):
+        the store rows whose ``bucket_cols`` values appear in ``keys``
+        (batch-bounded; any columns beyond ``bucket_cols`` are ignored).
+        Read cost is |affected buckets| partitions — the put-if-absent
+        probe's read path, exposed for callers that need the matched
+        rows' PAYLOAD (the candidate docs' shingle sets for Jaccard
+        verification; the band index's candidate postings list) rather
         than the absence set. Only the batch-sized key set rides a
         broadcast; the store is never shuffled or broadcast."""
         from pyspark.sql import functions as F
 
-        self._sync_meta()
-        want = keys.select(self.key_col).distinct().withColumn(
+        self.n_buckets = _read_bucket_count(self.path, self.n_buckets)
+        want = keys.select(self.bucket_cols).distinct().withColumn(
             self.BUCKET_COL, self._bucket_expr()
         )
-        buckets = [
-            r[0] for r in want.select(self.BUCKET_COL).distinct().collect()
-        ]
         return (
             self._read_store(spark)
-            .filter(F.col(self.BUCKET_COL).isin(buckets))
-            .join(F.broadcast(want.drop(self.BUCKET_COL)), self.key_col,
+            .filter(F.col(self.BUCKET_COL).isin(self._affected_buckets(want)))
+            .join(F.broadcast(want.drop(self.BUCKET_COL)), self.bucket_cols,
                   "left_semi")
             .drop(self.BUCKET_COL)
         )
@@ -334,7 +388,7 @@ class KeyedParquetSink:
         """
         from pyspark.sql import functions as F
 
-        self._sync_meta()
+        self.n_buckets = _read_bucket_count(self.path, self.n_buckets)
         listing = {b: self._bucket_files(b) for b in range(self.n_buckets)}
         todo = [
             b for b, fs in listing.items() if len(fs) > max_files_per_bucket
@@ -381,20 +435,14 @@ class KeyedParquetSink:
         bucket-spec evolution, Delta OPTIMIZE ZORDER re-layout — same
         full-rewrite cost, amortized over the store's lifetime).
 
-        Every row re-routes to ``pmod(xxhash64(key), new_n)`` — a key's
-        old and new bucket differ, so this is a full rewrite, NOT a
-        dynamic partition overwrite: the new layout is staged to a
-        sibling directory — with the meta sidecar recording the new
-        count written INTO the staged dir, so the count travels with
-        the data through the swap (ADVICE r11: writing it after the
-        swap left a crash window in which a fresh sink would probe a
-        resplit store at the constructor default and duplicate keys) —
-        and swapped in with two renames (crash between them leaves the
-        ``.resplit_old`` backup; recovery = rename it back). Must run
-        with the owning stream stopped.
+        Every row re-routes to ``pmod(xxhash64(*bucket_cols), new_n)`` —
+        a row's old and new bucket differ, so this is a full rewrite, NOT
+        a dynamic partition overwrite: the new layout is staged to a
+        sibling directory and swapped in by :func:`_swap_in` (the new
+        count travels with the data; a crash between the renames leaves
+        the ``.resplit_old`` backup). Must run with the owning stream
+        stopped.
         """
-        import shutil
-
         if not self.exists(spark):
             raise RuntimeError(f"no bucketed store at {self.path}")
         if n_buckets == self.n_buckets:
@@ -402,185 +450,11 @@ class KeyedParquetSink:
         self._store_schema = None
         df = spark.read.parquet(self.path).drop(self.BUCKET_COL)
         self.n_buckets = int(n_buckets)
-        staged = self.path.rstrip("/") + f".resplit{n_buckets}"
+        staged = self.path.rstrip("/") + ".resplit"
         df.withColumn(self.BUCKET_COL, self._bucket_expr()).write.mode(
             "overwrite"
         ).partitionBy(self.BUCKET_COL).parquet(staged)
-        with open(os.path.join(staged, self.META_FILE), "w") as f:
-            json.dump({"n_buckets": self.n_buckets}, f)
-        backup = self.path.rstrip("/") + ".resplit_old"
-        os.rename(self.path, backup)
-        os.rename(staged, self.path)
-        shutil.rmtree(backup)
-
-
-class BandIndexSink:
-    """Bucketed MinHash band inverted index — the streaming near-dup
-    gate's standing state (r13, VERDICT r12 #2): rows ``(band INT,
-    bv STRING, doc_id BIGINT)``, hash-bucketed on the BAND KEY
-    ``(band, bv)`` so a micro-batch's probe reads only the buckets its
-    own band values can live in — the ``KeyedParquetSink`` bucket-pruning
-    lever applied to an index whose key is legitimately NON-unique (many
-    documents share a band bucket; that collision IS the candidate
-    signal), which is exactly why the put-if-absent sink itself cannot
-    hold it: its probe dedups by key.
-
-    Idempotence contract: :meth:`append_batch` is put-if-absent on the
-    full composite ``(band, bv, doc_id)`` — a redelivered batch re-derives
-    identical band rows and every one drops in the anti-join, so the
-    index converges under at-least-once delivery exactly like the
-    reference's keyed store (signer/index.js:229-242), generalized from
-    content-equality to content-similarity.
-
-    Scale shape: per batch, the probe collects ≤ n_buckets distinct
-    bucket ids (bounded driver list), reads those hive partitions only,
-    and semi-joins them against the BROADCAST batch band keys; the store
-    is never shuffled, never broadcast, never scanned whole. At 100 TB
-    the store is the corpus's band table (4 rows/doc here) — bucket
-    count evolves offline exactly like ``KeyedParquetSink.resplit``."""
-
-    N_BUCKETS = 16
-    BUCKET_COL = "__bucket"
-    META_FILE = "_slsp_meta.json"
-
-    def __init__(self, path: str, n_buckets: int | None = None):
-        self.path = path
-        self.n_buckets = int(n_buckets or self.N_BUCKETS)
-        # store-schema cache (r13, guide §6): (band, bv, doc_id, bucket)
-        # is fixed for the store's lifetime — one schema inference serves
-        # every per-batch probe/append read
-        self._store_schema = None
-
-    def _read_store(self, spark: SparkSession) -> DataFrame:
-        if self._store_schema is None:
-            df = spark.read.parquet(self.path)
-            self._store_schema = df.schema
-            return df
-        return spark.read.schema(self._store_schema).parquet(self.path)
-
-    def _meta_path(self) -> str:
-        return os.path.join(self.path, self.META_FILE)
-
-    def _sync_meta(self) -> None:
-        try:
-            with open(self._meta_path()) as f:
-                self.n_buckets = int(json.load(f)["n_buckets"])
-        except (OSError, ValueError, KeyError):
-            pass
-
-    def _write_meta(self) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        with open(self._meta_path(), "w") as f:
-            json.dump({"n_buckets": self.n_buckets}, f)
-
-    def exists(self) -> bool:
-        if os.path.isdir(self.path) and any(
-            f.startswith(f"{self.BUCKET_COL}=") for f in os.listdir(self.path)
-        ):
-            self._sync_meta()
-            return True
-        return False
-
-    def _bucket_expr(self):
-        from pyspark.sql import functions as F
-
-        return F.pmod(
-            F.xxhash64(
-                F.concat_ws(
-                    ":", F.col("band").cast("string"), F.col("bv")
-                )
-            ),
-            F.lit(self.n_buckets),
-        ).cast("int")
-
-    def append_batch(
-        self, bands_df: DataFrame, seen: DataFrame | None = None
-    ) -> None:
-        """Put-if-absent append of ``(band, bv, doc_id)`` rows (see the
-        class docstring). Within-batch duplicates collapse first; the
-        cross-run probe prunes to the batch's buckets and anti-joins on
-        the composite — only batch-sized sets ride broadcasts.
-
-        ``seen`` (r14, guide §5): a caller that already probed the store
-        this batch can pass the probe result — any ``(band, bv, doc_id)``
-        superset of the store rows matching the batch's band keys, taken
-        BEFORE any same-batch append — and the absence check reuses it
-        instead of reading the store a second time. Sound because a
-        store row colliding with an appended row on the full composite
-        necessarily matches its ``(band, bv)`` key, so it is in the
-        probe result; the near-dup gate's appended rows are a subset of
-        the batch band rows it probed with."""
-        from pyspark.sql import functions as F
-
-        spark = bands_df.sparkSession
-        present = self.exists()  # syncs n_buckets before bucketing
-        fresh = bands_df.select("band", "bv", "doc_id").dropDuplicates(
-            ["band", "bv", "doc_id"]
-        ).withColumn(self.BUCKET_COL, self._bucket_expr())
-        if present:
-            # persist the deduped band rows across the bucket collect and
-            # the probe+write job (r13, guide §5; batch-bounded)
-            fresh = fresh.persist()
-            try:
-                if seen is None:
-                    buckets = [
-                        r[0]
-                        for r in fresh.select(self.BUCKET_COL)
-                        .distinct()
-                        .collect()
-                    ]
-                    seen = (
-                        self._read_store(spark)
-                        .filter(F.col(self.BUCKET_COL).isin(buckets))
-                        .select("band", "bv", "doc_id")
-                    )
-                else:
-                    seen = seen.select("band", "bv", "doc_id")
-                hits = seen.join(
-                    F.broadcast(fresh.select("band", "bv", "doc_id")),
-                    ["band", "bv", "doc_id"],
-                    "left_semi",
-                )
-                fresh.join(
-                    F.broadcast(hits), ["band", "bv", "doc_id"], "left_anti"
-                ).write.mode("append").partitionBy(self.BUCKET_COL).parquet(
-                    self.path
-                )
-            finally:
-                fresh.unpersist()
-        else:
-            fresh.write.mode("append").partitionBy(self.BUCKET_COL).parquet(
-                self.path
-            )
-            self._write_meta()
-
-    def probe(self, spark: SparkSession, bands_df: DataFrame) -> DataFrame:
-        """Store rows whose ``(band, bv)`` key appears in the batch's
-        band set: bucket-pruned read, semi-join against the BROADCAST
-        batch keys. The result is the candidate postings list — every
-        indexed doc sharing a band bucket with some batch doc."""
-        from pyspark.sql import functions as F
-
-        self._sync_meta()
-        want = bands_df.select("band", "bv").distinct().withColumn(
-            self.BUCKET_COL, self._bucket_expr()
-        )
-        buckets = [
-            r[0] for r in want.select(self.BUCKET_COL).distinct().collect()
-        ]
-        return (
-            self._read_store(spark)
-            .filter(F.col(self.BUCKET_COL).isin(buckets))
-            .join(
-                F.broadcast(want.drop(self.BUCKET_COL)),
-                ["band", "bv"],
-                "left_semi",
-            )
-            .drop(self.BUCKET_COL)
-        )
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return self._read_store(spark).drop(self.BUCKET_COL)
+        _swap_in(self.path, staged, self.n_buckets)
 
 
 class Scd2ParquetSink:
@@ -670,7 +544,6 @@ class Scd2ParquetSink:
     ``localCheckpoint`` materialization pass it used to require)."""
 
     N_BUCKETS = 8
-    META_FILE = "_slsp_meta.json"
 
     def __init__(self, path: str, n_buckets: int | None = None):
         self.path = path
@@ -687,26 +560,11 @@ class Scd2ParquetSink:
     def quarantine_path(self) -> str:
         return self.path.rstrip("/") + "_quarantine"
 
-    def _meta_path(self) -> str:
-        return os.path.join(self.path, self.META_FILE)
-
-    def _sync_meta(self) -> None:
-        try:
-            with open(self._meta_path()) as f:
-                self.n_buckets = int(json.load(f)["n_buckets"])
-        except (OSError, ValueError, KeyError):
-            pass
-
-    def _write_meta(self) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        with open(self._meta_path(), "w") as f:
-            json.dump({"n_buckets": self.n_buckets}, f)
-
     def exists(self) -> bool:
         import glob
 
         if glob.glob(os.path.join(self.path, "bucket=*")):
-            self._sync_meta()
+            self.n_buckets = _read_bucket_count(self.path, self.n_buckets)
             return True
         return False
 
@@ -845,18 +703,12 @@ class Scd2ParquetSink:
         pos = F.struct(
             F.col("ts_s").alias("t"), F.col("event_id").alias("e")
         )
-        if "seen_ts_s" in hist.columns:
-            # per-key max DELIVERED position (coalesce: rows written
-            # before the metadata existed fall back to their opening)
-            head_pos = F.struct(
-                F.coalesce("seen_ts_s", "valid_from_s").alias("t"),
-                F.coalesce("seen_event_id", "event_id").alias("e"),
-            )
-        else:  # legacy store: retained-opening head only
-            head_pos = F.struct(
-                F.col("valid_from_s").alias("t"),
-                F.col("event_id").alias("e"),
-            )
+        # per-key max DELIVERED position (coalesce: rows written before
+        # the metadata existed fall back to their opening)
+        head_pos = F.struct(
+            F.coalesce("seen_ts_s", "valid_from_s").alias("t"),
+            F.coalesce("seen_event_id", "event_id").alias("e"),
+        )
         head = hist.groupBy("user_id").agg(F.max(head_pos).alias("__head"))
         old = (
             cand.join(head, "user_id")
@@ -958,20 +810,11 @@ class Scd2ParquetSink:
             # class docstring; quarantined records never advance it)
             seen_src = cand.select("user_id", "ts_s", "event_id")
             if hist is not None:
-                if "seen_ts_s" in hist.columns:
-                    prior = hist.select(
-                        "user_id",
-                        F.coalesce("seen_ts_s", "valid_from_s").alias("ts_s"),
-                        F.coalesce("seen_event_id", "event_id").alias(
-                            "event_id"
-                        ),
-                    )
-                else:  # legacy store: openings are the best record we have
-                    prior = hist.select(
-                        "user_id",
-                        F.col("valid_from_s").alias("ts_s"),
-                        "event_id",
-                    )
+                prior = hist.select(
+                    "user_id",
+                    F.coalesce("seen_ts_s", "valid_from_s").alias("ts_s"),
+                    F.coalesce("seen_event_id", "event_id").alias("event_id"),
+                )
                 seen_src = seen_src.unionByName(prior)
                 old = hist.filter(F.col("bucket").isin(buckets)).select(
                     "user_id",
@@ -1019,7 +862,7 @@ class Scd2ParquetSink:
             for df in released:
                 df.unpersist()
         if not present:
-            self._write_meta()
+            _write_bucket_count(self.path, self.n_buckets)
 
     def _swap_affected_buckets(
         self, versioned: DataFrame, buckets: list[int]
@@ -1045,8 +888,6 @@ class Scd2ParquetSink:
         recovery for both is the idempotent batch replay. A fixed
         staging name keeps a crash-leftover from accumulating: the
         replay's ``overwrite`` reclaims it."""
-        import shutil
-
         staging = self.path.rstrip("/") + "_staging"
         versioned.write.mode("overwrite").partitionBy("bucket").parquet(
             staging
@@ -1088,8 +929,6 @@ class Scd2ParquetSink:
         changelogs — the same plan the ``lake_scd2_build`` batch query
         pins — so one code path defines the SCD2 semantics. Unflagged
         users sharing a bucket are carried over untouched."""
-        import shutil
-
         from pyspark.sql import functions as F
 
         self.exists()  # sync n_buckets from meta before bucketing
@@ -1133,9 +972,6 @@ class Scd2ParquetSink:
                 .filter(F.col("bucket").isin(buckets))
                 .join(F.broadcast(flagged), "user_id", "left_anti")
             )
-            for c in ("seen_ts_s", "seen_event_id"):  # legacy stores
-                if c not in keep.columns:
-                    keep = keep.withColumn(c, F.lit(None).cast("bigint"))
             self._swap_affected_buckets(keep.unionByName(rebuilt), buckets)
         finally:
             flagged.unpersist()
@@ -1144,14 +980,10 @@ class Scd2ParquetSink:
 
     def resplit(self, spark: SparkSession, n_buckets: int) -> None:
         """Offline bucket-count evolution — same contract as
-        :meth:`KeyedParquetSink.resplit` (stage to a sibling directory
-        with the meta sidecar written INTO it so the new count travels
-        through the two-rename swap — ADVICE r11, see that method);
-        buckets here are ``pmod(user_id, n)``. Must run with the stream
-        stopped.
+        :meth:`KeyedParquetSink.resplit` (stage to a sibling directory,
+        swap in by :func:`_swap_in`); buckets here are
+        ``pmod(user_id, n)``. Must run with the stream stopped.
         """
-        import shutil
-
         from pyspark.sql import functions as F
 
         if not self.exists():
@@ -1162,14 +994,9 @@ class Scd2ParquetSink:
         df = self._read_history(spark).withColumn(
             "bucket", F.pmod("user_id", F.lit(self.n_buckets)).cast("int")
         )
-        staged = self.path.rstrip("/") + f".resplit{n_buckets}"
+        staged = self.path.rstrip("/") + ".resplit"
         df.write.mode("overwrite").partitionBy("bucket").parquet(staged)
-        with open(os.path.join(staged, self.META_FILE), "w") as f:
-            json.dump({"n_buckets": self.n_buckets}, f)
-        backup = self.path.rstrip("/") + ".resplit_old"
-        os.rename(self.path, backup)
-        os.rename(staged, self.path)
-        shutil.rmtree(backup)
+        _swap_in(self.path, staged, self.n_buckets)
 
     def read(self, spark: SparkSession) -> DataFrame:
         return self._read_history(spark)

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from aws_localstack_stream_processing_spark.plans.stream_dedup_ops import (
     _N_BANDS,
     _N_STORE_BUCKETS,
+    _band_index,
     _banded,
     _corpus_sql,
     _shingled,
@@ -25,7 +26,6 @@ from aws_localstack_stream_processing_spark.plans.stream_dedup_ops import (
 )
 from aws_localstack_stream_processing_spark.plans.dialect import views
 from aws_localstack_stream_processing_spark.streaming.sinks import (
-    BandIndexSink,
     KeyedParquetSink,
 )
 
@@ -44,9 +44,9 @@ def gate_env(spark, tmp_path):
     shstore = KeyedParquetSink(
         f"{work}/shingles", "doc_id", n_buckets=_N_STORE_BUCKETS
     )
-    bstore = BandIndexSink(f"{work}/bands", n_buckets=_N_STORE_BUCKETS)
+    bstore = _band_index(f"{work}/bands")
     shstore.upsert_batch(csh, 0)
-    bstore.append_batch(_banded(csh))
+    bstore.upsert_batch(_banded(csh), 0)
     matches = f"{work}/matches"
     src = _staged_doc_batches(SF_DIR)
     batches = [

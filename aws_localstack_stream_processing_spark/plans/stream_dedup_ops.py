@@ -39,15 +39,14 @@ non-recursive closed form of the streaming process, exactly like
 
 from __future__ import annotations
 
-import os
 import shutil
 import tempfile
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import hashing, text
+from ..streaming.source import set_batch_mtimes, stage_once
 from .dialect import (
     arr_distinct,
     arr_intersect_len,
@@ -189,36 +188,25 @@ def _staged_doc_batches(sf_dir: str) -> str:
     single-parquet files (batch k = rows with ``b = k``), so the file
     stream replays them as a deterministic micro-batch sequence
     (``maxFilesPerTrigger=1`` — the ``staged_cdc_slices`` harness
-    pattern). Keyed by the source file's identity; restages on testdata
-    regeneration."""
+    pattern), staged once per state of ``documents.parquet``."""
     import duckdb
 
-    base = sf_dir.rstrip("/")
-    tag = os.path.basename(base)
-    st = os.stat(f"{base}/documents.parquet")
-    stage = f"/tmp/slsp_lshdocs_{tag}_{st.st_size}_{st.st_mtime_ns}"
-    marker = os.path.join(stage, "_STAGED")
-    if os.path.exists(marker):
-        return stage
-    shutil.rmtree(stage, ignore_errors=True)
-    os.makedirs(stage, exist_ok=True)
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS "
-        f"SELECT * FROM read_parquet('{base}/documents.parquet')"
-    )
-    mtime = time.time() - 3600
-    for k in range(3):
-        p = f"{stage}/f{k}.parquet"
-        con.execute(
-            f"COPY (SELECT doc_id, text FROM ({_incoming_sql('duck')}) t "
-            f"WHERE b = {k} ORDER BY doc_id) TO '{p}' (FORMAT PARQUET)"
-        )
-        os.utime(p, (mtime + 10 * k, mtime + 10 * k))
-    con.close()
-    with open(marker, "w") as f:
-        f.write("ok")
-    return stage
+    src = f"{sf_dir.rstrip('/')}/documents.parquet"
+
+    def build(stage: str) -> None:
+        paths = [f"{stage}/f{k}.parquet" for k in range(3)]
+        with duckdb.connect() as con:
+            con.execute(
+                f"CREATE VIEW documents AS SELECT * FROM read_parquet('{src}')"
+            )
+            for k, p in enumerate(paths):
+                con.execute(
+                    f"COPY (SELECT doc_id, text FROM ({_incoming_sql('duck')}) t "
+                    f"WHERE b = {k} ORDER BY doc_id) TO '{p}' (FORMAT PARQUET)"
+                )
+        set_batch_mtimes(paths)
+
+    return stage_once(src, "lshdocs", build)
 
 
 def _shingled(df: DataFrame) -> DataFrame:
@@ -254,7 +242,7 @@ def _banded(shing: DataFrame) -> DataFrame:
 
 
 def _seeded_corpus_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per testdata state, content-cached like the CDC
+    """Build (once per testdata state, :func:`stage_once` like the CDC
     staging) the corpus-seeded stores — ``shingles/`` (KeyedParquetSink,
     doc_id → shingle set) and ``bands/`` (:func:`_band_index`) — that
     every run copies fresh: the stream MUTATES its stores, so trials must
@@ -268,29 +256,19 @@ def _seeded_corpus_index(spark: SparkSession, sf_dir: str) -> str:
     change this name."""
     from ..streaming.sinks import KeyedParquetSink
 
-    base = sf_dir.rstrip("/")
-    tag = os.path.basename(base)
-    st = os.stat(f"{base}/documents.parquet")
-    cache = f"/tmp/slsp_lshidx_xxh64bv_{tag}_{st.st_size}_{st.st_mtime_ns}"
-    marker = os.path.join(cache, "_SEEDED")
-    if os.path.exists(marker):
-        return cache
-    shutil.rmtree(cache, ignore_errors=True)
-    staging = cache + ".build"
-    shutil.rmtree(staging, ignore_errors=True)
-    os.makedirs(staging, exist_ok=True)
-    views(spark, sf_dir, "documents")
-    csh = _shingled(spark.sql(_corpus_sql("spark"))).localCheckpoint(
-        eager=True
-    )  # one shingle pass feeds both stores
-    KeyedParquetSink(
-        f"{staging}/shingles", "doc_id", n_buckets=_N_STORE_BUCKETS
-    ).upsert_batch(csh, 0)
-    _band_index(f"{staging}/bands").upsert_batch(_banded(csh), 0)
-    os.rename(staging, cache)
-    with open(marker, "w") as f:
-        f.write("ok")
-    return cache
+    src = f"{sf_dir.rstrip('/')}/documents.parquet"
+
+    def build(cache: str) -> None:
+        views(spark, sf_dir, "documents")
+        csh = _shingled(spark.sql(_corpus_sql("spark"))).localCheckpoint(
+            eager=True
+        )  # one shingle pass feeds both stores
+        KeyedParquetSink(
+            f"{cache}/shingles", "doc_id", n_buckets=_N_STORE_BUCKETS
+        ).upsert_batch(csh, 0)
+        _band_index(f"{cache}/bands").upsert_batch(_banded(csh), 0)
+
+    return stage_once(src, "lshidx_xxh64bv", build)
 
 
 def make_gate(shstore, bstore, matches_path: str):

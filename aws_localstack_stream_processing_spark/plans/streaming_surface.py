@@ -747,41 +747,27 @@ def stream_manifest_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     state (and every run of tests/test_manifest_source.py and the e2e
     test), while repeat trials time what this query prices at scale —
     the manifest-planned READ path."""
-    import os
-
     from ..session import apply_runtime_confs
     from ..sources.manifest_datasource import register_manifest_source
     from ..streaming.jobs import run_ingest_stream_manifest
+    from ..streaming.source import stage_once
 
     apply_runtime_confs(spark)
-    base = sf_dir.rstrip("/")
-    st = os.stat(f"{base}/events.parquet")
-    work = (
-        f"/tmp/slsp_mlake_stage_{os.path.basename(base)}_"
-        f"{st.st_size}_{st.st_mtime_ns}"
-    )
-    src_dir = f"{work}/src"
-    lake = f"{work}/lake"
-    ev = spark.read.parquet(f"{base}/events.parquet")
-    if not os.path.exists(f"{work}/_STAGED"):
-        # A previous run that died between the checkpointed ingest and
-        # the _STAGED marker leaves a poisoned cache: its checkpoint
-        # would resume over freshly re-written (differently named) part
-        # files and duplicate lake rows, and the size+mtime cache key
-        # never changes so the corruption is sticky. Absent marker ⇒
-        # rebuild from a clean slate (ADVICE r8).
-        import shutil
+    src_file = f"{sf_dir.rstrip('/')}/events.parquet"
+    ev = spark.read.parquet(src_file)
 
-        shutil.rmtree(work, ignore_errors=True)
-        ev.repartition(4).write.mode("overwrite").parquet(src_dir)
+    def build(work: str) -> None:
+        ev.repartition(4).write.mode("overwrite").parquet(f"{work}/src")
         stream = (
             spark.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
+            .parquet(f"{work}/src")
         )
-        run_ingest_stream_manifest(spark, stream, lake, f"{work}/ckpt")
-        with open(f"{work}/_STAGED", "w") as fh:
-            fh.write("ok")
+        run_ingest_stream_manifest(spark, stream, f"{work}/lake", f"{work}/ckpt")
+
+    # a build that died before its marker is rebuilt from a clean slate:
+    # its checkpoint would resume over re-written part files (ADVICE r8)
+    lake = f"{stage_once(src_file, 'mlake_stage', build)}/lake"
     register_manifest_source(spark)
     lake_rows = (
         spark.readStream.format("manifest_lake")
@@ -916,30 +902,20 @@ def stream_kv_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     redelivery duplication (id % 5 slice delivered twice via
     array_repeat+explode on one source pass, r8) is baked into the
     staged records."""
-    import os
     import tempfile
 
+    from ..sources.firehose_datasource import register_firehose_source
     from ..sources.kv_sink_datasource import read_kv_table, register_kv_sink
+    from ..streaming.source import stage_once
 
     register_kv_sink(spark)
-    base = sf_dir.rstrip("/")
-    st = os.stat(f"{base}/events.parquet")
-    work = (
-        f"/tmp/slsp_kvstage_{os.path.basename(base)}_"
-        f"{st.st_size}_{st.st_mtime_ns}"
-    )
-    if not os.path.exists(f"{work}/_STAGED"):
-        import shutil
+    src_file = f"{sf_dir.rstrip('/')}/events.parquet"
 
-        from ..sources.firehose_datasource import register_firehose_source
-
-        # absent marker => rebuild from a clean slate (a run that died
-        # mid-stage must not leave a half-written source dir behind)
-        shutil.rmtree(work, ignore_errors=True)
+    def build(work: str) -> None:
         register_firehose_source(spark)
         src = (
             spark.read.format("firehose_sim")
-            .option("path", f"{base}/events.parquet")
+            .option("path", src_file)
             .option("numPartitions", "8")
             .load()
         )
@@ -971,8 +947,8 @@ def stream_kv_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         decoded.select(
             F.sha2(canon, 256).alias("key"), "event_type"
         ).repartition(4).write.mode("overwrite").parquet(f"{work}/src")
-        with open(f"{work}/_STAGED", "w") as fh:
-            fh.write("ok")
+
+    work = stage_once(src_file, "kvstage", build)
     keyed_schema = spark.read.parquet(f"{work}/src").schema
     keyed = spark.readStream.schema(keyed_schema).parquet(f"{work}/src")
     store = tempfile.mkdtemp(prefix="slsp_kv_store_")

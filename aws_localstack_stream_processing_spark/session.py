@@ -158,6 +158,19 @@ def concurrent_jobs(spark: SparkSession, *thunks):
         return [f.result() for f in futures]
 
 
+def _default_driver_memory() -> str:
+    """Half the host's ``MemTotal``, capped at 48g: a one-process test
+    suite's JVM may grow to its heap limit, and a limit above physical
+    memory gets it OOM-killed on small hosts. ``SPARK_DRIVER_MEMORY``
+    overrides it."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "48g"
+    return f"{max(1, min(48, kb // (2 * 1024 * 1024)))}g"
+
+
 def get_spark(
     app_name: str = "aws-localstack-stream-processing-spark",
     master: str | None = None,
@@ -172,7 +185,10 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         # small dims (region/nation/supplier/keyrings) should always broadcast

@@ -82,7 +82,6 @@ class AlarmActionSink:
         )
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        from ..session import concurrent_jobs
         from ..sources.kv_sink_datasource import (
             read_kv_table,
             register_kv_sink,
@@ -114,22 +113,14 @@ class AlarmActionSink:
             except FileNotFoundError:
                 prev = None
             diff = self.diff_plan(st, prev)
-            # the two writes run as concurrent driver jobs (guide §2.6):
-            # they target DIFFERENT stores, both consume the persisted
-            # ``st``, and the diff's read of the state store is frozen —
-            # ``read_kv_table`` resolved the committed ``batch=`` dirs on
-            # the driver above, so the state append's NEW batch dir is
-            # invisible to the already-planned prev view
-            def _write(df: DataFrame, path: str):
-                return lambda: df.write.format("kv_upsert").option(
-                    "path", path
-                ).mode("append").save()
-
-            concurrent_jobs(
-                spark,
-                _write(diff, self.actions_path),
-                _write(st, self.state_path),
-            )
+            # actions first, then state: the state upsert is what makes a
+            # replay diff to empty, so it may commit only after the page
+            # is durable — a failed actions write leaves the state store
+            # untouched and the replayed batch re-emits the transitions
+            for df, path in ((diff, self.actions_path), (st, self.state_path)):
+                df.write.format("kv_upsert").option("path", path).mode(
+                    "append"
+                ).save()
         finally:
             st.unpersist()
 

@@ -46,20 +46,37 @@ def _write_bucket_count(path: str, n_buckets: int) -> None:
         json.dump({"n_buckets": n_buckets}, f)
 
 
+def _rename_over(live: str, new: str, backup: str) -> None:
+    """Replace directory ``live`` by ``new`` with two renames: ``live`` →
+    ``backup`` (when it exists), then ``new`` → ``live`` (when it
+    exists). If the second rename raises, the backup is moved back
+    before re-raising, so ``live`` reads as before. The caller drops
+    ``backup`` once every replacement it makes has succeeded."""
+    had_live = os.path.exists(live)
+    if had_live:
+        os.rename(live, backup)
+    try:
+        if os.path.exists(new):
+            os.rename(new, live)
+    except BaseException:
+        if had_live:
+            os.rename(backup, live)
+        raise
+
+
 def _swap_in(path: str, staged: str, n_buckets: int) -> None:
     """Swap a fully written rewrite at ``staged`` in for the store at
     ``path``. The bucket-count sidecar is written INTO the staged dir
     first, so the count travels with the data through the swap (ADVICE
     r11: writing it after the swap left a crash window in which a fresh
     sink probed the rewritten store at its constructor default and
-    duplicated keys). Then two renames: ``path`` → ``<staged>_old``,
-    ``staged`` → ``path``; the backup is dropped last. A crash between
-    the renames leaves the backup; recovery = rename it back."""
+    duplicated keys). Then :func:`_rename_over` with the backup at
+    ``<staged>_old``; the backup is dropped last. A crash between the
+    renames leaves the backup; recovery = rename it back."""
     _write_bucket_count(staged, n_buckets)
     backup = staged + "_old"
     shutil.rmtree(backup, ignore_errors=True)
-    os.rename(path, backup)
-    os.rename(staged, path)
+    _rename_over(path, staged, backup)
     shutil.rmtree(backup)
 
 
@@ -849,12 +866,9 @@ class Scd2ParquetSink:
             # localCheckpoint that existed only to cut lineage from
             # self.path (a full extra materialization pass per micro-batch)
             # is gone — then each affected bucket directory is swapped in
-            # with a driver rename. Crash window: a crash between a
-            # bucket's remove and its rename can lose that bucket's files,
-            # the SAME non-transactional exposure the plain-parquet
-            # dynamic-partition overwrite already documented (its commit
-            # deletes the old files per partition before the final
-            # rename); recovery for both is the idempotent batch replay.
+            # with driver renames, its old files kept in a backup until
+            # every bucket swapped; a failed swap is recovered by the
+            # idempotent batch replay (see _swap_affected_buckets).
             self._swap_affected_buckets(versioned, buckets)
         finally:
             if hist is not None:
@@ -880,28 +894,34 @@ class Scd2ParquetSink:
         micro-batch: checkpoint the merge into block storage, then a
         second job re-reading the checkpointed blocks to write parquet.
 
-        Crash window: a crash between a bucket's remove and its rename
-        can lose that bucket's files — the SAME non-transactional
-        exposure the plain-parquet dynamic-partition overwrite already
-        documented (its commit likewise deletes each affected
-        partition's old files before renaming in the staged ones);
-        recovery for both is the idempotent batch replay. A fixed
-        staging name keeps a crash-leftover from accumulating: the
-        replay's ``overwrite`` reclaims it."""
-        staging = self.path.rstrip("/") + "_staging"
+        Each live bucket moves to a backup directory OUTSIDE the store
+        path (a ``bucket=N.bak`` sibling inside it would be picked up by
+        partition discovery as a string bucket value) before its staged
+        replacement is renamed in (:func:`_rename_over`). A rename that
+        raises moves that bucket's backup back, so the failed bucket
+        reads as before; buckets already swapped hold the merged batch,
+        and the idempotent batch replay converges both. Backups and
+        staging are dropped only after every bucket swapped. A crash
+        between a bucket's two renames leaves its old files in the
+        backup directory. A fixed staging name keeps a crash-leftover
+        from accumulating: the replay's ``overwrite`` reclaims it."""
+        base = self.path.rstrip("/")
+        staging, backups = base + "_staging", base + "_swapold"
         versioned.write.mode("overwrite").partitionBy("bucket").parquet(
             staging
         )
-        try:
-            os.makedirs(self.path, exist_ok=True)
-            for b in buckets:
-                new = os.path.join(staging, f"bucket={b}")
-                old = os.path.join(self.path, f"bucket={b}")
-                shutil.rmtree(old, ignore_errors=True)
-                if os.path.isdir(new):
-                    os.rename(new, old)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
+        shutil.rmtree(backups, ignore_errors=True)
+        os.makedirs(backups)
+        os.makedirs(self.path, exist_ok=True)
+        for b in buckets:
+            part = f"bucket={b}"
+            _rename_over(
+                os.path.join(self.path, part),
+                os.path.join(staging, part),
+                os.path.join(backups, part),
+            )
+        shutil.rmtree(backups)
+        shutil.rmtree(staging)
 
     def needs_rebuild(self, spark: SparkSession) -> DataFrame:
         """Keys whose history is incomplete: distinct user_ids in the

@@ -8,9 +8,18 @@ checkpointed exactly-once — no queue, no visibility timeouts.
 For the correctness harness the driver's ``events`` parquet is treated as an
 append-only stream (one file = one micro-batch; ``maxFilesPerTrigger``
 reproduces the reference's batch-size knob, app.ts:46).
+
+The ``staged_*`` delivery plans reproduce the reference's S3
+``ObjectCreated`` → SQS delivery (at-least-once, redelivery, arrival order
+chosen by the delivery layer; app.ts:434-438) as mtime-ordered files,
+staged once per state of the source file by :func:`stage_once`.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,11 +56,94 @@ def events_stream(
     return df
 
 
-def lake_stream(spark: SparkSession, lake_dir: str, schema) -> DataFrame:
-    """File-stream over a partitioned lake directory — the replay source
-    (SURVEY §2.6 T8): re-running a batch query over ``raw/`` IS replay."""
-    apply_runtime_confs(spark)
-    return spark.readStream.schema(schema).parquet(lake_dir)
+def stage_once(src_file: str, name: str, build) -> str:
+    """The staged-input lifecycle every delivery plan below shares: a
+    directory ``/tmp/slsp_<name>_<dir basename>_<size>_<mtime_ns>``
+    built once per state of ``src_file`` and reused until the source
+    changes (keyed by the SOURCE file's identity: if the driver
+    regenerates the testdata, a stale staged copy would silently diverge
+    from the oracle's view of the same table).
+
+    The ``_STAGED`` marker is written last, after ``build(dir)``
+    returns, so it commits the build. Absent marker ⇒ whatever a dead or
+    failed build left behind is removed and ``build`` runs again into a
+    fresh, empty directory — a half-written stage (or a checkpoint that
+    would resume over re-written files) is never reused. Builds run in
+    place, never build-then-rename: staged checkpoints and manifests
+    record absolute file paths."""
+    st = os.stat(src_file)
+    tag = os.path.basename(os.path.dirname(os.path.abspath(src_file)))
+    stage = f"/tmp/slsp_{name}_{tag}_{st.st_size}_{st.st_mtime_ns}"
+    marker = os.path.join(stage, "_STAGED")
+    if os.path.exists(marker):
+        return stage
+    shutil.rmtree(stage, ignore_errors=True)
+    os.makedirs(stage)
+    build(stage)
+    with open(marker, "w") as f:
+        f.write("ok")
+    return stage
+
+
+def set_batch_mtimes(*sides: list[str]) -> None:
+    """Arrival order = batch index: the file source lists by mtime, so
+    batch k's files get mtime ``base + 10·k``. Each side is one
+    directory's files in batch order; the k-th files of every side share
+    an mtime, so two-sided plans trigger in lockstep."""
+    base = time.time() - 3600
+    for side in sides:
+        for k, path in enumerate(side):
+            os.utime(path, (base + 10 * k, base + 10 * k))
+
+
+def _events_file(sf_dir: str) -> str:
+    return f"{sf_dir.rstrip('/')}/events.parquet"
+
+
+def _copy_to_parquet(jobs: list[tuple[str, str]]) -> None:
+    """DuckDB ``COPY (select) TO path`` for each ``(select, path)``."""
+    import duckdb
+
+    with duckdb.connect() as con:
+        for select, path in jobs:
+            con.execute(f"COPY ({select}) TO '{path}' (FORMAT PARQUET)")
+
+
+def _side_files(stage: str, n: int) -> tuple[list[str], list[str]]:
+    """``left/f<k>.parquet`` and ``right/f<k>.parquet`` paths (k < n) of a
+    two-sided stage, with both side directories created."""
+    sides = []
+    for side in ("left", "right"):
+        os.makedirs(f"{stage}/{side}")
+        sides.append([f"{stage}/{side}/f{k}.parquet" for k in range(n)])
+    return sides[0], sides[1]
+
+
+# the k-th 5-day slice of the month (slice 5 takes the tail days)
+_SLICE = "least((day(ts) - 1) // 5, 5)"
+
+
+def _id_mod_batches(sf_dir: str, n_batches: int, name: str, redeliver: bool) -> str:
+    """``events`` as ``n_batches`` mtime-ordered files, batch k = rows
+    with ``event_id % n_batches = k``; with ``redeliver`` the last file
+    also carries batch 0's ``event_id % 5 = 0`` slice."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = _events_file(sf_dir)
+
+    def build(stage: str) -> None:
+        t = pq.read_table(src)
+        ids = t["event_id"].to_numpy()
+        paths = [os.path.join(stage, f"b{k}.parquet") for k in range(n_batches)]
+        for k, path in enumerate(paths):
+            mask = ids % n_batches == k
+            if redeliver and k == n_batches - 1:
+                mask = mask | ((ids % n_batches == 0) & (ids % 5 == 0))
+            pq.write_table(t.filter(pa.array(mask)), path)
+        set_batch_mtimes(paths)
+
+    return stage_once(src, f"{name}{n_batches}", build)
 
 
 def staged_event_batches(sf_dir: str, n_batches: int = 3) -> str:
@@ -64,38 +156,8 @@ def staged_event_batches(sf_dir: str, n_batches: int = 3) -> str:
     membership and arrival order are pure functions of ``event_id``, the
     watermark trajectory — and therefore the exact set of dropped late
     rows — is deterministic and SQL-expressible (see
-    ``stream_watermark_late_drop``). Staged once per (sf, n) under /tmp
-    and reused; the marker file commits the staging atomically."""
-    import os
-    import time
-
-    import numpy as np  # noqa: F401  (imported for the mask dtype)
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    base = sf_dir.rstrip("/")
-    tag = os.path.basename(base)
-    # key the stage by the SOURCE file's identity (size + mtime): if the
-    # driver regenerates the testdata, a stale staged copy would silently
-    # diverge from the oracle's view of the same table
-    st = os.stat(f"{base}/events.parquet")
-    fp = f"{st.st_size}_{st.st_mtime_ns}"
-    stage = f"/tmp/slsp_late_stage_{tag}_{fp}_{n_batches}"
-    marker = os.path.join(stage, "_STAGED")
-    if os.path.exists(marker):
-        return stage
-    os.makedirs(stage, exist_ok=True)
-    t = pq.read_table(f"{base}/events.parquet")
-    ids = t["event_id"].to_numpy()
-    mtime = time.time() - 3600
-    for k in range(n_batches):
-        path = os.path.join(stage, f"b{k}.parquet")
-        pq.write_table(t.filter(pa.array(ids % n_batches == k)), path)
-        # arrival order = batch index: the file source lists by mtime
-        os.utime(path, (mtime + 10 * k, mtime + 10 * k))
-    with open(marker, "w") as f:
-        f.write("ok")
-    return stage
+    ``stream_watermark_late_drop``)."""
+    return _id_mod_batches(sf_dir, n_batches, "late", redeliver=False)
 
 
 def staged_redelivery_batches(sf_dir: str, n_batches: int = 6) -> str:
@@ -105,37 +167,7 @@ def staged_redelivery_batches(sf_dir: str, n_batches: int = 6) -> str:
     delivery whose duplicate copies arrive many batches (and several
     watermark advances) after their originals. Harness for the
     TTL-bounded dedup boundary (``stream_dedup_ttl_boundary``)."""
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    base = sf_dir.rstrip("/")
-    tag = os.path.basename(base)
-    # key the stage by the SOURCE file's identity (size + mtime): if the
-    # driver regenerates the testdata, a stale staged copy would silently
-    # diverge from the oracle's view of the same table
-    st = os.stat(f"{base}/events.parquet")
-    fp = f"{st.st_size}_{st.st_mtime_ns}"
-    stage = f"/tmp/slsp_redeliv_stage_{tag}_{fp}_{n_batches}"
-    marker = os.path.join(stage, "_STAGED")
-    if os.path.exists(marker):
-        return stage
-    os.makedirs(stage, exist_ok=True)
-    t = pq.read_table(f"{base}/events.parquet")
-    ids = t["event_id"].to_numpy()
-    mtime = time.time() - 3600
-    for k in range(n_batches):
-        mask = ids % n_batches == k
-        if k == n_batches - 1:
-            mask = mask | ((ids % n_batches == 0) & (ids % 5 == 0))
-        path = os.path.join(stage, f"b{k}.parquet")
-        pq.write_table(t.filter(pa.array(mask)), path)
-        os.utime(path, (mtime + 10 * k, mtime + 10 * k))
-    with open(marker, "w") as f:
-        f.write("ok")
-    return stage
+    return _id_mod_batches(sf_dir, n_batches, "redeliv", redeliver=True)
 
 
 def staged_triple_sides(sf_dir: str) -> tuple[str, str]:
@@ -156,49 +188,33 @@ def staged_triple_sides(sf_dir: str) -> tuple[str, str]:
             batches (capped at the last file) — exercising the join's
             late-input filter and buffer eviction mid-replay.
 
-    Both sides have exactly 6 mtime-ordered files (lockstep triggers) and
-    are keyed by the source file's identity (restage on regeneration)."""
-    import os
-    import time
+    Both sides have exactly 6 mtime-ordered files (lockstep triggers)."""
+    src = _events_file(sf_dir)
+    ev = f"read_parquet('{src}')"
+    br = f"CASE WHEN event_id % 7 = 0 THEN least({_SLICE} + 2, 5) ELSE {_SLICE} END"
 
-    import duckdb
+    def build(stage: str) -> None:
+        lefts, rights = _side_files(stage, 6)
+        jobs = []
+        for k in range(6):
+            lw = f"{_SLICE} = {k}"
+            if k >= 1:
+                lw = f"({lw}) OR ({_SLICE} = {k - 1} AND event_id % 5 = 0)"
+            jobs.append((
+                f"SELECT event_id, ts, event_type, value FROM {ev} "
+                f"WHERE {lw} ORDER BY event_id",
+                lefts[k],
+            ))
+            jobs.append((
+                f"SELECT event_id, ts + INTERVAL 30 MINUTE AS rts FROM {ev} "
+                f"WHERE {br} = {k} ORDER BY event_id",
+                rights[k],
+            ))
+        _copy_to_parquet(jobs)
+        set_batch_mtimes(lefts, rights)
 
-    base = sf_dir.rstrip("/")
-    tag = os.path.basename(base)
-    st = os.stat(f"{base}/events.parquet")
-    fp = f"{st.st_size}_{st.st_mtime_ns}"
-    left = f"/tmp/slsp_triple_left_{tag}_{fp}"
-    right = f"/tmp/slsp_triple_right_{tag}_{fp}"
-    marker = os.path.join(left, "_STAGED")
-    if os.path.exists(marker):
-        return left, right
-    os.makedirs(left, exist_ok=True)
-    os.makedirs(right, exist_ok=True)
-    con = duckdb.connect()
-    src = f"read_parquet('{base}/events.parquet')"
-    sl = "least((day(ts) - 1) // 5, 5)"
-    br = f"CASE WHEN event_id % 7 = 0 THEN least({sl} + 2, 5) ELSE {sl} END"
-    mtime = time.time() - 3600
-    for k in range(6):
-        lw = f"{sl} = {k}"
-        if k >= 1:
-            lw = f"({lw}) OR ({sl} = {k - 1} AND event_id % 5 = 0)"
-        con.execute(
-            f"COPY (SELECT event_id, ts, event_type, value FROM {src} "
-            f"WHERE {lw} ORDER BY event_id) "
-            f"TO '{left}/f{k}.parquet' (FORMAT PARQUET)"
-        )
-        con.execute(
-            f"COPY (SELECT event_id, ts + INTERVAL 30 MINUTE AS rts FROM {src} "
-            f"WHERE {br} = {k} ORDER BY event_id) "
-            f"TO '{right}/f{k}.parquet' (FORMAT PARQUET)"
-        )
-        for p in (f"{left}/f{k}.parquet", f"{right}/f{k}.parquet"):
-            os.utime(p, (mtime + 10 * k, mtime + 10 * k))
-    con.close()
-    with open(marker, "w") as f:
-        f.write("ok")
-    return left, right
+    stage = stage_once(src, "triple", build)
+    return f"{stage}/left", f"{stage}/right"
 
 
 def staged_join_sides(sf_dir: str) -> tuple[str, str]:
@@ -207,8 +223,7 @@ def staged_join_sides(sf_dir: str) -> tuple[str, str]:
     (batch = ``event_id % 3``; file 3 empty so both sources advance in
     lockstep), RIGHT = one ack per event at ``ts + 30min``, arriving in
     its event's batch — except the ``event_id % 5 = 0`` slice, delayed to
-    the final file. Both directories share mtime ordering and are keyed
-    by the source file's identity (restage on regeneration).
+    the final file. Both sides share mtime ordering.
 
     4 files per side (was 6 until r9): each micro-batch pays fixed
     source + state-store commit costs, and the boundary semantics only
@@ -218,46 +233,45 @@ def staged_join_sides(sf_dir: str) -> tuple[str, str]:
     final file (measured at sf0.01: 1330 acks late-filter-dropped, 4
     delayed pairs surviving the boundary — the same deciding branches
     as the 6-file replay at two-thirds the replay cost)."""
-    import os
-    import time
+    src = _events_file(sf_dir)
+    ev = f"read_parquet('{src}')"
 
-    import duckdb
+    def build(stage: str) -> None:
+        lefts, rights = _side_files(stage, 4)
+        jobs = []
+        for k in range(4):
+            lw = f"event_id % 3 = {k}" if k < 3 else "FALSE"
+            jobs.append((
+                f"SELECT event_id, ts, event_type FROM {ev} WHERE {lw} "
+                f"ORDER BY event_id",
+                lefts[k],
+            ))
+            rw = (
+                f"event_id % 3 = {k} AND event_id % 5 <> 0"
+                if k < 3
+                else "event_id % 5 = 0"
+            )
+            jobs.append((
+                f"SELECT event_id, ts + INTERVAL 30 MINUTE AS rts FROM {ev} "
+                f"WHERE {rw} ORDER BY event_id",
+                rights[k],
+            ))
+        _copy_to_parquet(jobs)
+        set_batch_mtimes(lefts, rights)
 
-    base = sf_dir.rstrip("/")
-    tag = os.path.basename(base)
-    st = os.stat(f"{base}/events.parquet")
-    fp = f"{st.st_size}_{st.st_mtime_ns}"
-    left = f"/tmp/slsp_join_left4_{tag}_{fp}"
-    right = f"/tmp/slsp_join_right4_{tag}_{fp}"
-    marker = os.path.join(left, "_STAGED")
-    if os.path.exists(marker):
-        return left, right
-    os.makedirs(left, exist_ok=True)
-    os.makedirs(right, exist_ok=True)
-    con = duckdb.connect()
-    src = f"read_parquet('{base}/events.parquet')"
-    mtime = time.time() - 3600
-    for k in range(4):
-        lw = f"event_id % 3 = {k}" if k < 3 else "FALSE"
-        con.execute(
-            f"COPY (SELECT event_id, ts, event_type FROM {src} WHERE {lw} "
-            f"ORDER BY event_id) TO '{left}/f{k}.parquet' (FORMAT PARQUET)"
-        )
-        rw = (
-            f"event_id % 3 = {k} AND event_id % 5 <> 0"
-            if k < 3
-            else "event_id % 5 = 0"
-        )
-        con.execute(
-            f"COPY (SELECT event_id, ts + INTERVAL 30 MINUTE AS rts FROM {src} "
-            f"WHERE {rw} ORDER BY event_id) TO '{right}/f{k}.parquet' (FORMAT PARQUET)"
-        )
-        for p in (f"{left}/f{k}.parquet", f"{right}/f{k}.parquet"):
-            os.utime(p, (mtime + 10 * k, mtime + 10 * k))
-    con.close()
-    with open(marker, "w") as f:
-        f.write("ok")
-    return left, right
+    stage = stage_once(src, "join4", build)
+    return f"{stage}/left", f"{stage}/right"
+
+
+def _cdc_records(src: str) -> str:
+    """The SCD2 audit cohort's changelog projected to the CDC record
+    shape ``(user_id BIGINT, attr, ts_s BIGINT, event_id)``."""
+    return (
+        "SELECT CAST(user_id AS BIGINT) AS user_id, event_type AS attr, "
+        "CAST(floor(epoch(ts)) AS BIGINT) AS ts_s, "
+        "CAST(event_id AS BIGINT) AS event_id "
+        f"FROM read_parquet('{src}') WHERE user_id % 20 = 0"
+    )
 
 
 def staged_cdc_slices(sf_dir: str) -> str:
@@ -278,44 +292,24 @@ def staged_cdc_slices(sf_dir: str) -> str:
     Columns are pre-projected to the CDC record shape
     ``(user_id BIGINT, attr, ts_s BIGINT, event_id)``: epoch seconds are
     computed at stage time by the same second-truncation both oracle
-    dialects use, keeping the stream free of timestamp-type normalization.
-    Keyed by the source file's identity (restage on regeneration)."""
-    import os
-    import time
+    dialects use, keeping the stream free of timestamp-type
+    normalization."""
+    src = _events_file(sf_dir)
 
-    import duckdb
+    def build(stage: str) -> None:
+        paths = [f"{stage}/f{k}.parquet" for k in range(6)]
+        jobs = []
+        for k, path in enumerate(paths):
+            where = f"{_SLICE} = {k}"
+            if k >= 1:
+                where = f"({where}) OR ({_SLICE} = {k - 1} AND event_id % 5 = 0)"
+            jobs.append(
+                (f"{_cdc_records(src)} AND ({where}) ORDER BY event_id", path)
+            )
+        _copy_to_parquet(jobs)
+        set_batch_mtimes(paths)
 
-    base = sf_dir.rstrip("/")
-    tag = os.path.basename(base)
-    st = os.stat(f"{base}/events.parquet")
-    fp = f"{st.st_size}_{st.st_mtime_ns}"
-    stage = f"/tmp/slsp_cdc_stage_{tag}_{fp}"
-    marker = os.path.join(stage, "_STAGED")
-    if os.path.exists(marker):
-        return stage
-    os.makedirs(stage, exist_ok=True)
-    con = duckdb.connect()
-    src = f"read_parquet('{base}/events.parquet')"
-    sl = "least((day(ts) - 1) // 5, 5)"
-    mtime = time.time() - 3600
-    for k in range(6):
-        where = f"{sl} = {k}"
-        if k >= 1:
-            where = f"({where}) OR ({sl} = {k - 1} AND event_id % 5 = 0)"
-        con.execute(
-            f"COPY (SELECT CAST(user_id AS BIGINT) AS user_id, "
-            f"event_type AS attr, "
-            f"CAST(floor(epoch(ts)) AS BIGINT) AS ts_s, "
-            f"CAST(event_id AS BIGINT) AS event_id "
-            f"FROM {src} WHERE user_id % 20 = 0 AND ({where}) "
-            f"ORDER BY event_id) TO '{stage}/f{k}.parquet' (FORMAT PARQUET)"
-        )
-        p = f"{stage}/f{k}.parquet"
-        os.utime(p, (mtime + 10 * k, mtime + 10 * k))
-    con.close()
-    with open(marker, "w") as f:
-        f.write("ok")
-    return stage
+    return stage_once(src, "cdc_stage", build)
 
 
 def staged_cdc_slices_ooo(sf_dir: str) -> str:
@@ -326,45 +320,24 @@ def staged_cdc_slices_ooo(sf_dir: str) -> str:
     "late replay" batch ``f6`` — the real-world failure a re-sharded
     binlog tail or a mis-merged backfill produces. Slices 0-5 stay
     per-key in-order (no redelivery mixing here; redelivery absorption
-    has its own staging); f6 is entirely out of order. Keyed by source
-    identity like the in-order staging."""
-    import os
-    import time
+    has its own staging); f6 is entirely out of order."""
+    src = _events_file(sf_dir)
+    delayed = f"(event_id % 17 = 3 AND {_SLICE} <= 4)"
 
-    import duckdb
-
-    base = sf_dir.rstrip("/")
-    tag = os.path.basename(base)
-    st = os.stat(f"{base}/events.parquet")
-    fp = f"{st.st_size}_{st.st_mtime_ns}"
-    stage = f"/tmp/slsp_cdc_ooo_{tag}_{fp}"
-    marker = os.path.join(stage, "_STAGED")
-    if os.path.exists(marker):
-        return stage
-    os.makedirs(stage, exist_ok=True)
-    con = duckdb.connect()
-    src = f"read_parquet('{base}/events.parquet')"
-    sl = "least((day(ts) - 1) // 5, 5)"
-    delayed = f"(event_id % 17 = 3 AND {sl} <= 4)"
-    proj = (
-        "SELECT CAST(user_id AS BIGINT) AS user_id, event_type AS attr, "
-        "CAST(floor(epoch(ts)) AS BIGINT) AS ts_s, "
-        "CAST(event_id AS BIGINT) AS event_id "
-        f"FROM {src} WHERE user_id % 20 = 0"
-    )
-    mtime = time.time() - 3600
-    for k in range(6):
-        con.execute(
-            f"COPY ({proj} AND {sl} = {k} AND NOT {delayed} "
-            f"ORDER BY event_id) TO '{stage}/f{k}.parquet' (FORMAT PARQUET)"
+    def build(stage: str) -> None:
+        paths = [f"{stage}/f{k}.parquet" for k in range(7)]
+        jobs = [
+            (
+                f"{_cdc_records(src)} AND {_SLICE} = {k} AND NOT {delayed} "
+                f"ORDER BY event_id",
+                paths[k],
+            )
+            for k in range(6)
+        ]
+        jobs.append(
+            (f"{_cdc_records(src)} AND {delayed} ORDER BY event_id", paths[6])
         )
-        os.utime(f"{stage}/f{k}.parquet", (mtime + 10 * k, mtime + 10 * k))
-    con.execute(
-        f"COPY ({proj} AND {delayed} ORDER BY event_id) "
-        f"TO '{stage}/f6.parquet' (FORMAT PARQUET)"
-    )
-    os.utime(f"{stage}/f6.parquet", (mtime + 60, mtime + 60))
-    con.close()
-    with open(marker, "w") as f:
-        f.write("ok")
-    return stage
+        _copy_to_parquet(jobs)
+        set_batch_mtimes(paths)
+
+    return stage_once(src, "cdc_ooo", build)

@@ -181,3 +181,40 @@ def test_diff_plan_never_shuffles_or_broadcasts_the_store(spark, store):
     # and behavior: pruned prev answers the diff exactly — the ALARM slot
     # is already stored with the same state, so the diff is empty
     assert diff.count() == 0
+
+
+def test_failed_action_write_commits_no_state(spark, tmp_path):
+    """At-least-once emission: the state upsert is what makes a replay
+    diff to empty, so it must not commit when the action write fails —
+    otherwise the replayed batch diffs to empty and the page is lost.
+    ``<store>/actions`` as a regular file makes the action write raise;
+    once it is gone, the replay emits the transitions."""
+    import os
+
+    from aws_localstack_stream_processing_spark.sources.kv_sink_datasource import (
+        committed_batches,
+    )
+
+    base = datetime.datetime(2024, 3, 1, 0, 0, 0)
+    hourly = spark.createDataFrame(
+        [(base + datetime.timedelta(hours=h), "a", n) for h, n in enumerate(_HOURLY)],
+        "h timestamp, event_type string, n long",
+    )
+    store = str(tmp_path / "store")
+    os.makedirs(store)
+    blocker = os.path.join(store, "actions")
+    with open(blocker, "w") as f:
+        f.write("not a directory")
+    sink = AlarmActionSink(store, _TEST_THRESHOLD)
+    with pytest.raises(Exception):
+        sink.process_batch(hourly, 0)
+    assert committed_batches(sink.state_path) == []
+
+    os.remove(blocker)
+    sink.process_batch(hourly, 0)  # the redelivered batch
+    log = {(r.hour, r.state) for r in emitted_actions(spark, store).collect()}
+    assert {
+        ("2024-03-01 02:00:00", "ALARM"),
+        ("2024-03-01 04:00:00", "OK"),
+        ("2024-03-01 07:00:00", "ALARM"),
+    } <= log

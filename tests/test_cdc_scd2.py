@@ -533,3 +533,52 @@ def test_mixed_schema_store_guard_metadata_deterministic(spark, tmp_path):
     assert [r.attr for r in u1.collect()] == ["signup", "error", "ok"]
     # the merged read always exposes the metadata columns
     assert "seen_ts_s" in sink.read(spark).columns
+
+
+def test_failed_bucket_swap_keeps_store_and_replay_converges(
+    spark, tmp_path, monkeypatch
+):
+    """A merge whose SECOND bucket swap raises must not destroy data: the
+    failed bucket still reads as before (its old files are moved back
+    from the backup), and replaying the same batch converges to the
+    history a clean merge produces."""
+    import os
+
+    seed = spark.createDataFrame(
+        [(u, "signup", 1000 + u, u) for u in range(1, 17)], _SCHEMA
+    )
+    batch = spark.createDataFrame(
+        [(u, "error", 2000 + u, 100 + u) for u in (1, 2, 3)], _SCHEMA
+    )
+    clean = Scd2ParquetSink(str(tmp_path / "clean"))
+    clean.merge_batch(seed, 0)
+    clean.merge_batch(batch, 1)
+
+    sink = Scd2ParquetSink(str(tmp_path / "h"))
+    sink.merge_batch(seed, 0)
+    before = {u: _user_rows(spark, sink, u) for u in range(1, 17)}
+
+    staging = sink.path + "_staging"
+    real_rename = os.rename
+    swapped = []
+
+    def rename(src, dst):
+        if str(src).startswith(staging + os.sep + "bucket="):
+            swapped.append(int(str(src).rsplit("bucket=", 1)[1]))
+            if len(swapped) == 2:
+                raise OSError("injected rename failure")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+    with pytest.raises(OSError, match="injected"):
+        sink.merge_batch(batch, 1)
+    monkeypatch.undo()
+
+    # every user outside the one bucket that did swap reads as before —
+    # the failed bucket's users included
+    for u in range(1, 17):
+        if u % Scd2ParquetSink.N_BUCKETS != swapped[0]:
+            assert _user_rows(spark, sink, u) == before[u], u
+
+    sink.merge_batch(batch, 1)  # the replay
+    assert _history_rows(spark, sink) == _history_rows(spark, clean)

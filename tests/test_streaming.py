@@ -355,3 +355,49 @@ def test_join_boundary_semantics(spark):
         (F.col("event_id") % 3 <= 1) & (F.col("event_id") % 5 != 0)
     ).count()
     assert n_early_ontime <= n_matched < n_acks
+
+
+def test_stage_once_lifecycle(tmp_path):
+    """The staged-input lifecycle every delivery plan shares: a committed
+    stage is reused without rebuilding, a failed build leaves nothing a
+    later build can see, and a rewritten source file stages anew."""
+    import shutil
+    import uuid
+
+    from aws_localstack_stream_processing_spark.streaming.source import (
+        stage_once,
+    )
+
+    src = tmp_path / "events.parquet"
+    src.write_text("v1")
+    name = f"lifecycle_{uuid.uuid4().hex[:8]}"
+    calls = []
+
+    def build(d):
+        calls.append(d)
+        with open(os.path.join(d, "f0"), "w") as f:
+            f.write("x")
+
+    def failing(d):
+        with open(os.path.join(d, "leftover"), "w") as f:
+            f.write("x")
+        raise RuntimeError("build died")
+
+    made = []
+    try:
+        with pytest.raises(RuntimeError):
+            stage_once(str(src), name, failing)
+        first = stage_once(str(src), name, build)
+        made.append(first)
+        # the retry started from an empty directory
+        assert sorted(os.listdir(first)) == ["_STAGED", "f0"]
+        assert stage_once(str(src), name, build) == first
+        assert calls == [first]  # the second call did not rebuild
+
+        src.write_text("v2, longer")  # new size and mtime
+        second = stage_once(str(src), name, build)
+        made.append(second)
+        assert second != first and calls == [first, second]
+    finally:
+        for d in made:
+            shutil.rmtree(d, ignore_errors=True)

@@ -78,6 +78,21 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture
+def uncoalesced(spark):
+    """Shuffle outputs keep all ``spark.sql.shuffle.partitions``
+    partitions, as a batch larger than AQE's coalescing target does:
+    a tiny test batch otherwise coalesces into one task, which hides
+    what a write does per task."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        yield spark
+    finally:
+        spark.conf.set(key, prev)
+
+
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()

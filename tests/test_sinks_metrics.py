@@ -271,7 +271,8 @@ def test_keyed_sink_bucket_compaction(spark, tmp_path):
     )
 
     sink = KeyedParquetSink(str(tmp_path / "kv"), "key")
-    # 12 batches x ~200 keys: every bucket collects ~12 small files
+    # 12 batches x 200 keys: each batch touches every bucket and, routed
+    # by bucket, adds one file to each, so every bucket holds 12 files
     for b in range(12):
         sink.upsert_batch(
             spark.range(b * 200, (b + 1) * 200).select(
@@ -515,3 +516,119 @@ def test_store_schema_cache_survives_batches_and_resets_on_resplit(
     assert sink._store_schema is None
     rows2 = sorted(tuple(r) for r in sink.read(spark).collect())
     assert rows2 == rows1
+
+
+# -- bucket-routed writes: at most one file per bucket per write -------------
+
+
+def _files_per_bucket(sink) -> dict[int, int]:
+    import glob
+    import os
+
+    counts: dict[int, int] = {}
+    for f in glob.glob(os.path.join(sink.path, f"{sink.BUCKET_COL}=*", "*.parquet")):
+        b = int(os.path.basename(os.path.dirname(f)).split("=", 1)[1])
+        counts[b] = counts.get(b, 0) + 1
+    return counts
+
+
+@pytest.mark.parametrize("shape", SHAPES)
+def test_upsert_adds_one_file_per_touched_bucket(
+    spark, tmp_path, shape, uncoalesced
+):
+    """A batch spread over several input partitions adds exactly one file
+    to each bucket it touches, on the first write and on a probe-append
+    write: rows are routed by bucket before the write, so a bucket never
+    gains one file per write task."""
+    from aws_localstack_stream_processing_spark.streaming.sinks import (
+        KeyedParquetSink,
+    )
+
+    path = str(tmp_path / "kv")
+    if shape == "single":
+        sink = KeyedParquetSink(path, "key")
+    else:
+        sink = KeyedParquetSink(path, ["grp", "key"], bucket_cols=["grp"])
+
+    def rows(lo, hi):
+        return spark.range(lo, hi, 1, 4).select(
+            (F.col("id") % 50).alias("grp"),
+            F.sha2(F.col("id").cast("string"), 256).alias("key"),
+            F.lit("v").alias("payload"),
+        )
+
+    def buckets_of(df):
+        return {r[0] for r in df.select(sink._bucket_expr()).distinct().collect()}
+
+    first = rows(0, 800)
+    assert first.rdd.getNumPartitions() >= 4
+    sink.upsert_batch(first, 0)
+    after_first = _files_per_bucket(sink)
+    assert set(after_first) == buckets_of(first)
+    assert set(after_first.values()) == {1}
+
+    # probe-append: 400 new keys and 100 redelivered ones, over 4 partitions
+    batch = rows(700, 1200)
+    assert batch.rdd.getNumPartitions() >= 4
+    sink.upsert_batch(batch, 1)
+    after = _files_per_bucket(sink)
+    added = {b: n - after_first.get(b, 0) for b, n in after.items()}
+    assert {b for b, n in added.items() if n} == buckets_of(rows(800, 1200))
+    assert set(added.values()) <= {0, 1}
+    assert sink.read(spark).count() == 1200
+
+
+def test_resplit_and_migrate_write_one_file_per_bucket(
+    spark, tmp_path, uncoalesced
+):
+    """The offline rewrites route by bucket too: after migrate_legacy of
+    a flat store written by several tasks, and after resplit, every
+    bucket holds exactly one file."""
+    from aws_localstack_stream_processing_spark.streaming.sinks import (
+        KeyedParquetSink,
+    )
+
+    path = str(tmp_path / "kv")
+    spark.range(0, 4000, 1, 4).select(
+        F.sha2(F.col("id").cast("string"), 256).alias("key"),
+        F.lit("old").alias("payload"),
+    ).write.parquet(path)  # flat layout, one file per task
+    sink = KeyedParquetSink(path, "key")
+    assert sink.migrate_legacy(spark) >= 4
+    counts = _files_per_bucket(sink)
+    assert len(counts) == 16 and set(counts.values()) == {1}
+    sink.resplit(spark, 32)
+    counts = _files_per_bucket(sink)
+    assert len(counts) == 32 and set(counts.values()) == {1}
+    assert sink.read(spark).count() == 4000
+
+
+def test_empty_batch_leaves_store_untouched(spark, tmp_path):
+    """An empty batch (a watermark-only micro-batch) into an existing
+    store writes nothing: every file under the store, the write's
+    ``_SUCCESS`` marker included, keeps its name and mtime, and the read
+    view is unchanged."""
+    import os
+
+    from aws_localstack_stream_processing_spark.streaming.sinks import (
+        KeyedParquetSink,
+    )
+
+    def listing(path):
+        return {
+            os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _, fs in os.walk(path)
+            for f in fs
+        }
+
+    sink = KeyedParquetSink(str(tmp_path / "kv"), "key")
+    rows = spark.range(0, 500, 1, 4).select(
+        F.sha2(F.col("id").cast("string"), 256).alias("key"),
+        F.lit("v").alias("payload"),
+    )
+    sink.upsert_batch(rows, 0)
+    before_files = listing(sink.path)
+    before_view = sorted(tuple(r) for r in sink.read(spark).collect())
+    sink.upsert_batch(rows.filter(F.lit(False)), 1)
+    assert listing(sink.path) == before_files
+    assert sorted(tuple(r) for r in sink.read(spark).collect()) == before_view
